@@ -32,12 +32,21 @@ import java.security.MessageDigest
   *
   * The class list rides the expression as a literal (formula-derived
   * weights need no table at inference — see the query's comment).
+  *
+  * Contracts: the class list is non-empty and every weight p, q is
+  * non-negative (both checked at construction — a negative weight would
+  * make `%` differ from `pmod`). Tokens must be non-null: a NULL array
+  * yields a NULL struct (the fold form yields a struct with a NULL
+  * score) and a NULL element fails the task. The `domain_classify`
+  * call site (`words(text)`) satisfies both for non-null text.
   */
 case class DomainScore(child: Expression,
     classes: Seq[(String, Long, Long)])
   extends RefCallCodegen {
 
   require(classes.nonEmpty, "classes must be non-empty")
+  require(classes.forall { case (_, p, q) => p >= 0 && q >= 0 },
+    s"class weights must be non-negative: $classes")
 
   override def dataType: DataType = StructType(Seq(
     StructField("score", LongType, nullable = false),

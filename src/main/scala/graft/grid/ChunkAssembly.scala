@@ -4,10 +4,10 @@ package graft.grid
   * requested region overlaps, obtain the chunk's payload from a caller
   * callback, and copy the intersection into one flat C-order output —
   * innermost-dimension runs via System.arraycopy (type-agnostic on
-  * primitive arrays). Used by both on-disk stores ([[BinaryGridStore]],
-  * [[ZarrGridStore]]); the callback decides the chunk's stored shape, so
-  * exact-size edge chunks (binary store) and padded-to-full edge chunks
-  * (Zarr v2) both assemble through the same odometer.
+  * primitive arrays). Used by [[ZarrGridStore]] for plain chunks and
+  * for the inner chunks of v3 shards; stored chunks always carry the
+  * FULL chunk shape (Zarr pads edge chunks), so the copy addresses every
+  * chunk with the same strides.
   */
 /** Inner-chunk geometry of an outer block — the single home of the
   * row-offset arithmetic every shard encoder/decoder shares
@@ -116,24 +116,20 @@ private[grid] object ChunkAssembly {
   }
 
   /** Gather `ranges` (start, length per dim) of an array with dimension
-    * sizes `dimSz`, chunked by `chunkSz`. `readChunk(chunkIdx, srcShape)`
-    * must return the chunk's payload as a flat C-order primitive array
-    * of shape `srcShape` — the EFFECTIVE (boundary-clipped) chunk shape
-    * is passed, and implementations whose edge chunks are stored padded
-    * to the full chunk shape pass their own shape through
-    * `storedShape` instead (the copy only touches the intersection, so
-    * padding cells are never read as long as the stored shape covers
-    * the effective one).
+    * sizes `dimSz`, chunked by `chunkSz`. `readChunk(chunkIdx)` must
+    * return the chunk's payload as a flat C-order primitive array of the
+    * full `chunkSz` shape, edge chunks padded (the copy only touches
+    * the intersection with the array extent, so padding cells are never
+    * read).
     */
   def gather(ranges: Seq[(Int, Int)], chunkSz: Seq[Int], dimSz: Seq[Int],
-      dtype: GridType,
-      storedShape: (Seq[Int], Array[Int]) => Array[Int],
-      readChunk: (Seq[Int], Array[Int]) => AnyRef): AnyRef = {
+      dtype: GridType, readChunk: Seq[Int] => AnyRef): AnyRef = {
     val nd = ranges.length
     val outShape = ranges.map(_._2).toArray
     val n = outShape.product
     val out = alloc(dtype, n)
     val outStride = strides(outShape)
+    val srcStride = strides(chunkSz.toArray)
     val cLo = (0 until nd).map(i => ranges(i)._1 / chunkSz(i))
     val cHi = (0 until nd).map(i =>
       (ranges(i)._1 + ranges(i)._2 - 1) / chunkSz(i))
@@ -144,14 +140,12 @@ private[grid] object ChunkAssembly {
       val chunkStart = (0 until nd).map(i => ci(i) * chunkSz(i))
       val effShape = (0 until nd)
         .map(i => math.min(chunkSz(i), dimSz(i) - chunkStart(i))).toArray
-      val srcShape = storedShape(ci.toSeq, effShape)
       val lo = (0 until nd)
         .map(i => math.max(ranges(i)._1, chunkStart(i))).toArray
       val hi = (0 until nd).map(i =>
         math.min(ranges(i)._1 + ranges(i)._2,
           chunkStart(i) + effShape(i))).toArray
-      val src = readChunk(ci.toSeq, srcShape)
-      val srcStride = strides(srcShape)
+      val src = readChunk(ci.toSeq)
       // copy [lo, hi): odometer over outer dims, arraycopy inner runs
       val run = hi(nd - 1) - lo(nd - 1)
       val pos = lo.clone()

@@ -23,7 +23,7 @@ final class SerializableHadoopConf(@transient var value: Configuration)
   }
 }
 
-/** All BinaryGridStore / GridWriter byte I/O goes through the Hadoop
+/** All Zarr store / GridWriter byte I/O goes through the Hadoop
   * FileSystem API, so one code path serves local disk (`file:` or bare
   * paths), HDFS, S3A and GCS — the storage reality of a 100 TB deployment
   * (the reference gets this for free from fsspec inside Zarr;
@@ -164,8 +164,8 @@ object GridIO {
   }
 
   /** Delete every `.staging-*` sibling of a store root (residue of
-    * crashed appends; see GridWriter.append's single-writer contract —
-    * no live writer owns one when this runs). Before deleting, HEAL
+    * crashed appends; see ZarrGridStore.appendFromRows' single-writer
+    * contract — no live writer owns one when this runs). Before deleting, HEAL
     * the replace phase a crashed append may have left half-done: the
     * staging tree's `.replace-manifest` lists the store files it was
     * about to replace through [[replaceWithBackup]]; any destination

@@ -192,9 +192,8 @@ final case class ShardMeta(
   * stored-axis permutation); numcodecs `shuffle`, `delta` and
   * `vlen-utf8` (`|O` string arrays) filters; missing chunk
   * files read as `fill_value`; edge chunks stored PADDED to the full
-  * chunk shape (the v2 rule — [[BinaryGridStore]] stores them clipped,
-  * which is why both share [[ChunkAssembly]] with different
-  * `storedShape` callbacks). CF time axes decode through the same
+  * chunk shape (the v2 rule, which [[ChunkAssembly]] relies on). CF
+  * time axes decode through the same
   * two-tier [[graft.time.CfCalendar]] bridge as every other source:
   * Gregorian-like `units`/`calendar` attributes become real timestamps,
   * non-Gregorian calendars keep int64 offsets with the metadata that
@@ -212,7 +211,7 @@ final case class ZarrGridStore(root: String, schema: GridSchema,
     hconf: SerializableHadoopConf = GridIO.shippable(),
     /** Per-chunk (min,max) / sums recorded by THIS engine's writers in
       * the `.graft-stats.json` sidecar (keys `"<var> <ci.dotted>"`,
-      * same contract as BinaryGridStore), loaded lazily per variable
+      * the [[ChunkStats]] law), loaded lazily per variable
       * under format v2 ([[StatsSource]]). Parquet-footer rules apply:
       * the sidecar is part of the written format — rewriting chunk
       * files by hand without dropping it is corruption. Foreign trees
@@ -522,15 +521,15 @@ object ZarrGridStore {
       }
       val key = (0 until nd).map(d =>
         outerCi(d) * innersPerOuter(d) + pos(d)).mkString(".")
-      out += ((key, BinaryGridStore.chunkStats(slice),
-        BinaryGridStore.chunkSum(slice)))
+      out += ((key, ChunkStats.chunkStats(slice),
+        ChunkStats.chunkSum(slice)))
       k += 1
     }
     out.result()
   }
 
   /** Sidecar carrying per-chunk value stats for zarr trees — the same
-    * (min,max)/sum law BinaryGridStore records in metadata.txt, keyed
+    * (min,max)/sum law [[ChunkStats]] defines, keyed
     * `"<var> <ci.dotted>"`. zarr-python ignores unknown files, so the
     * tree stays a perfectly ordinary zarr archive. Absent on foreign
     * trees (no stats, no pruning — always sound).
@@ -554,7 +553,7 @@ object ZarrGridStore {
     */
   private[grid] val StatsSidecar = ".graft-stats.json"
 
-  /** `kind` tag per dtype, mirroring BinaryGridStore.chunkStats boxing:
+  /** `kind` tag per dtype, mirroring [[ChunkStats.chunkStats]] boxing:
     * long-kind arrays carry (Long, Long) (exact past 2^53), everything
     * else (Double, Double).
     */
@@ -1023,13 +1022,10 @@ object ZarrGridStore {
         // shard pays ~1 request instead of one per inner chunk.
         val decoded = readInnerChunks(root, a, sh, ranges, conf)
         ChunkAssembly.gather(ranges, sh.innerShape, a.shape, a.dtype,
-          storedShape = (_, _) => sh.innerShape.toArray,
-          readChunk = (ci, _) => decoded(ci))
+          decoded)
       case None =>
         ChunkAssembly.gather(ranges, a.chunkShape, a.shape, a.dtype,
-          // zarr v2 stores edge chunks padded to the full chunk shape
-          storedShape = (_, _) => a.chunkShape.toArray,
-          readChunk = (ci, _) => readChunk(root, a, ci, conf))
+          readChunk(root, a, _, conf))
     }
   }
 
@@ -2216,7 +2212,7 @@ object ZarrGridStore {
         else compress(toLE(padded, dtype), comp, dtype.byteWidth)
       GridIO.write(s"$dir/${ci.mkString(".")}", payload, conf)
       (s"$varName ${ci.mkString(".")}",
-        BinaryGridStore.chunkStats(data), BinaryGridStore.chunkSum(data))
+        ChunkStats.chunkStats(data), ChunkStats.chunkSum(data))
     }
   }
 
@@ -2366,11 +2362,10 @@ object ZarrGridStore {
     * materialization and no intermediate store. [[GridWriter]]'s
     * machinery does the heavy lifting — one (chunk, offset, value)
     * triple per cell, one hash repartition, executors assemble dense
-    * chunks — but the sink writes PADDED little-endian compressed v2
-    * chunk files instead of `.bin`s; the driver writes only group/array
-    * metadata + coordinate arrays and consolidates. Same row contract
-    * as `GridWriter.write`: `df` carries the schema's dim columns and
-    * each variable's value column. Unset cells become the declared
+    * chunks — and the sink writes PADDED little-endian compressed v2
+    * chunk files; the driver writes only group/array metadata +
+    * coordinate arrays and consolidates. `df` carries the schema's dim
+    * columns and each variable's value column. Unset cells become the declared
     * fill (NaN for float kinds, 0 for ints).
     */
   def writeFromRows(df: org.apache.spark.sql.DataFrame, schema: GridSchema,
@@ -2412,8 +2407,8 @@ object ZarrGridStore {
     * encoding for every growing variable (anything else fails loudly
     * up front — staged chunks are encoded plain, and silently mixing
     * encodings inside one array corrupts it). Appended edge chunks pad
-    * with NaN/0 like every other write. SINGLE WRITER per store (same
-    * contract as the binary-store append): staging is uniquely
+    * with NaN/0 like every other write. SINGLE WRITER per store:
+    * staging is uniquely
     * suffixed, so a crashed append leaves an inert `.staging-*` tree —
     * plus, if the crash hit the commit phase of an UNALIGNED append,
     * at most a half-replaced edge chunk protected by a `.appendbak`
@@ -2758,8 +2753,7 @@ object ZarrGridStore {
   /** Appending a slab whose `along` coordinates overlap the store
     * would silently DUPLICATE axis labels (the coordinate array just
     * concatenates) and double-count those steps in every later scan —
-    * the binary store's validateAppend rejects this; both zarr append
-    * faces call this to do the same. Compares internal values, so no
+    * both zarr append faces call this to reject it. Compares internal values, so no
     * external-box mismatch can slip an overlap through.
     */
   private[grid] def rejectOverlappingSlab(exDim: DimDef, slabDim: DimDef,
@@ -2928,6 +2922,24 @@ object ZarrGridStore {
       case _ => throw new IllegalArgumentException(
         s"bad compressor '$s' (none | zlib[:level] | gzip[:level] | " +
           "zstd[:level] | blosc[:cname][:clevel][:bit|:byte|:noshuffle])")
+    }
+
+  /** Inverse of [[parseCompressor]] for a v3 writer: the compressor
+    * string that re-encodes with the same codec and level. v3 has no
+    * `zlib` codec, so zlib maps to `gzip` (the same DEFLATE stream).
+    */
+  private[graft] def compressorSpec(comp: Option[(String, Int)]): String =
+    comp match {
+      case None => "none"
+      case Some((id, lvl)) if id.startsWith("blosc") =>
+        val parts = id.split("/")
+        val cname = if (parts.length > 1) parts(1) else "lz4"
+        val mode =
+          if (parts.length > 2 && parts(2) == "none") "noshuffle"
+          else if (parts.length > 2) parts(2) else "byte"
+        s"blosc:$cname:$lvl:$mode"
+      case Some(("zlib", lvl)) => s"gzip:$lvl"
+      case Some((id, lvl)) => s"$id:$lvl"
     }
 
   /** (cname, shuffle mode) of a `blosc/<cname>/<mode>` id (defaults for

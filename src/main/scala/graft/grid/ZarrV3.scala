@@ -464,8 +464,8 @@ object ZarrV3 {
       GridIO.write(s"$dir/c/${ci.mkString("/")}", payload, conf)
       innerSz match {
         case None => Seq((s"$varName ${ci.mkString(".")}",
-          BinaryGridStore.chunkStats(data),
-          BinaryGridStore.chunkSum(data)))
+          ChunkStats.chunkStats(data),
+          ChunkStats.chunkSum(data)))
         case Some(inner) =>
           ZarrGridStore.innerChunkStats(data, eff, ci.toArray, chunkSz,
             inner).map { case (k, mm, sm) => (s"$varName $k", mm, sm) }

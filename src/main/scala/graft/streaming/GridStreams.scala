@@ -4,105 +4,45 @@ import graft.grid._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-/** Streaming ingest INTO the on-disk grid store: the live-archive shape
-  * (a reanalysis feed emits the next hours; a sensor network emits the
-  * next scan) built from pieces the engine already has — each
-  * micro-batch of rows reverse-pivots onto the template grid
-  * ([[graft.grid.GridResult.toGridWithTemplate]]) and lands as NEW
-  * chunk files past the existing extent
-  * ([[graft.grid.BinaryGridStore.appendAlong]]); old chunks are never
-  * touched and queries opened after a batch see one seamless grid.
-  *
-  * Scale/size contract: a micro-batch must carry COMPLETE slabs along
-  * `along` (every (non-along) cell present — the reverse pivot errors
-  * on duplicates and fills gaps with NaN, which chunk stats then
-  * refuse), and batch volume is a few chunks, so the driver-side
-  * scatter is bounded by chunk size — the same envelope as the
-  * driver-side `BinaryGridStore.write`. Bigger backfills go through
-  * the distributed [[graft.grid.GridWriter]] instead; this sink is for
-  * the steady drip at the head of the archive.
+/** Streaming ingest INTO and out of a Zarr grid store: the live-archive
+  * shape (a reanalysis feed emits the next hours; a sensor network emits
+  * the next scan). The write face appends each micro-batch of rows
+  * through the distributed [[graft.grid.ZarrGridStore.appendFromRows]]
+  * (v2 or v3 by layout); the read face tails a growing tree's chunk
+  * files as cell rows. Queries opened after a batch see one seamless
+  * grid.
   */
 object GridStreams {
 
-  /** A foreachBatch writer appending each micro-batch to the store at
-    * `root` along `along`. `dims` is the row-to-grid dimension order
-    * (must match the store's); every other column is a data variable.
-    * Call `.start()` (+ checkpointLocation for restart semantics).
+  /** A foreachBatch writer appending each micro-batch to the Zarr tree
+    * at `root` (v2 or v3 — appendFromRows dispatches by layout) along
+    * `along`: the streaming head of a cloud archive. Rows carry the
+    * store's dim columns plus every variable spanning `along`; the slab
+    * schema derives from the store itself per batch. Inherits
+    * everything the batch append has: unaligned batches
+    * read-modify-write the edge chunk, the commit protocol is
+    * scheme-aware (renames on HDFS/local, atomic whole-object PUTs on
+    * S3A-style stores), and per-variable stats merge touches only the
+    * growing variables' files. Call `.start()` (+ checkpointLocation
+    * for restart semantics).
     */
-  def appendSink(rows: DataFrame, root: String, template: GridSchema,
-      dims: Seq[String], along: String): DataStreamWriter[Row] =
+  def appendSink(rows: DataFrame, root: String,
+      along: String): DataStreamWriter[Row] =
     rows.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        appendBatch(batch, root, template, dims, along)
+      (batch: DataFrame, _: Long) => appendBatch(batch, root, along)
     }
 
-  /** One batch: reverse-pivot rows onto (template non-along coords) x
-    * (the batch's own `along` coordinates, ascending) and append.
+  /** One micro-batch: drop already-present `along` values, build the
+    * slab schema from the store's own (non-along dims verbatim, vars
+    * verbatim, `along` = the batch's new coordinates ascending), and
+    * run the distributed unaligned append.
     *
     * Replay-safe: foreachBatch is at-least-once, so `along` values the
     * store already carries are dropped before appending — a replayed
     * batch becomes a no-op instead of a duplicated slab, upgrading the
     * sink to effectively-once without any checkpoint coupling.
     */
-  def appendBatch(batch: DataFrame, root: String, template: GridSchema,
-      dims: Seq[String], along: String): Unit = {
-    if (batch.isEmpty) return
-    val existing = BinaryGridStore.open(root)
-    val have = coordValues(existing.schema.dim(along).coords).toSet
-    val alongVals: IndexedSeq[Any] =
-      batch.select(along).distinct().orderBy(along).collect()
-        .map(_.get(0)).toIndexedSeq.filterNot(have)
-    if (alongVals.isEmpty) return
-    // every batch must close whole chunks: a ragged append is legal
-    // once but poisons every LATER batch (validateAppend would then
-    // fail forever) — fail THIS batch with an actionable message
-    // instead of bricking the stream one batch later
-    val axisChunk = existing.chunks.getOrElse(along, 1)
-    require(alongVals.size % axisChunk == 0,
-      s"micro-batch carries ${alongVals.size} new $along steps — not a " +
-        s"multiple of the $along chunk size $axisChunk; size triggers " +
-        "so each batch closes whole chunks")
-    val fresh = batch.filter(batch.col(along).isin(alongVals: _*))
-    // complete slabs only: the reverse pivot NaN-fills missing cells
-    // and a later batch carrying them would be dropped as a replay —
-    // silent permanent data loss. Count instead and fail fast.
-    val cellsPerStep = dims.filterNot(_ == along)
-      .map(d => template.dim(d).size.toLong).product
-    requireCompleteSlab(fresh.count(), alongVals.size * cellsPerStep,
-      along)
-    val coords: Map[String, IndexedSeq[Any]] = dims.map { d =>
-      d -> (if (d == along) alongVals
-      else coordValues(template.dim(d).coords))
-    }.toMap
-    val res = GridResult.toGridWithTemplate(fresh, dims, coords)
-    val slice = ArrayGridStore.fromResult(res, template)
-    BinaryGridStore.appendAlong(root, slice, along)
-    ()
-  }
-
-  /** [[appendSink]] for a REAL Zarr tree (v2 or v3 — appendFromRows
-    * dispatches by layout): the streaming head of a cloud archive.
-    * Needs no template — the slab schema derives from the store itself
-    * per batch. Inherits everything the batch append has: unaligned
-    * batches read-modify-write the edge chunk (no whole-chunk batch
-    * rule, unlike the binary sink), the commit protocol is
-    * scheme-aware (renames on HDFS/local, atomic whole-object PUTs on
-    * S3A-style stores), per-variable stats merge touches only the
-    * growing variables' files, and replayed `along` values are dropped
-    * before appending (effectively-once, same as [[appendSink]]).
-    */
-  def appendSinkZarr(rows: DataFrame, root: String,
-      along: String): DataStreamWriter[Row] =
-    rows.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) => appendBatchZarr(batch, root, along)
-    }
-
-  /** One zarr micro-batch: drop already-present `along` values, build
-    * the slab schema from the store's own (non-along dims verbatim,
-    * vars verbatim, `along` = the batch's new coordinates ascending),
-    * and run the distributed unaligned append.
-    */
-  def appendBatchZarr(batch: DataFrame, root: String,
+  def appendBatch(batch: DataFrame, root: String,
       along: String): Unit = {
     if (batch.isEmpty) return
     val existing = ZarrGridStore.open(root)
@@ -120,12 +60,15 @@ object GridStreams {
     if (alongVals.isEmpty) return
     val fresh = batch.filter(batch.col(along).isin(alongVals: _*))
     // complete slabs only — a NaN-filled missing cell arriving in a
-    // later batch would be dropped as a replay (same rule and reason
-    // as the binary sink)
+    // later batch would be dropped as a replay: silent permanent data
+    // loss, so incomplete slabs fail the batch loudly instead
     val cellsPerStep = existing.schema.dims.filterNot(_.name == along)
       .map(_.size.toLong).product
-    requireCompleteSlab(fresh.count(), alongVals.size * cellsPerStep,
-      along)
+    val got = fresh.count()
+    val expect = alongVals.size * cellsPerStep
+    require(got == expect,
+      s"micro-batch covers $got of $expect cells for its $along steps; " +
+        "slabs must arrive complete within one batch")
     val slabDims = existing.schema.dims.map { d =>
       if (d.name != along) d
       else DimDef(along, internalCoords(d.coords, alongVals),
@@ -136,17 +79,6 @@ object GridStreams {
       root, along)
     ()
   }
-
-  /** Shared slab-completeness rule of both append faces: a NaN-filled
-    * missing cell arriving in a LATER batch would be dropped as a
-    * replay — silent permanent data loss — so incomplete slabs fail
-    * the batch loudly instead.
-    */
-  private def requireCompleteSlab(got: Long, expect: Long,
-      along: String): Unit =
-    require(got == expect,
-      s"micro-batch covers $got of $expect cells for its $along steps; " +
-        "slabs must arrive complete within one batch")
 
   /** Internal (stored) values of a growable coordinate axis, as a
     * membership test.
@@ -218,150 +150,36 @@ object GridStreams {
         s"${other.getClass.getSimpleName} axis")
   }
 
-  /** Tail a growing store as a STREAM — the read side of the archive's
-    * streaming story (the write side is [[appendSink]]): Spark's
-    * binaryFile streaming source watches `<root>/<varName>` — its
-    * checkpointed file tracking provides exactly-once chunk delivery —
-    * and every chunk file (present at start or appended later) decodes
-    * map-side into cell rows `(dim coords..., value)`, the same rows
-    * the batch table serves. Downstream windows/aggregations compose
-    * as on any stream.
-    *
-    * Ordering contract: [[graft.grid.BinaryGridStore.appendAlong]]
-    * writes chunk files BEFORE the metadata commit, so a poll racing an
-    * in-flight append can surface a chunk whose `along` coords are not
-    * yet committed. The decode task re-reads the store metadata with a
-    * short exponential backoff (~6 s budget) until the commit lands;
-    * if the store stays torn past the budget the task fails, which
-    * (once task retries are exhausted) STOPS the streaming query — the
-    * binaryFile checkpoint has already planned the file, so recovery is
-    * a manual restart after the writer commits, not an automatic
-    * re-poll. Coordinates re-read per task from the store's small
-    * metadata file.
-    */
-  def tailCells(spark: org.apache.spark.sql.SparkSession, root: String,
-      varName: String): DataFrame = {
-    val store0 = BinaryGridStore.open(root)
-    val v = store0.schema.vars.find(_.name == varName).getOrElse(
-      throw new IllegalArgumentException(s"unknown var $varName"))
-    val dimNames = v.dims
-    val outSchema = store0.schema.tableSchema(dimNames, Seq(v))
-    val binSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("content",
-        org.apache.spark.sql.types.BinaryType)))
-    val raw = spark.readStream.format("binaryFile")
-      .schema(binSchema)
-      .option("pathGlobFilter", "*.bin")
-      // default maxFileAge (7d) silently skips chunk files older than a
-      // week relative to the newest — an archive grown over months
-      // would stream only its head; deliver everything
-      .option("maxFileAge", "36500d")
-      .load(s"$root/$varName")
-      .select("path", "content")
-    val name = varName
-    val hconf = store0.hconf // executor-safe Hadoop conf for re-opens
-    raw.mapPartitions { rows =>
-      // fresh metadata per task: sees coords committed by appends
-      var store = BinaryGridStore.open(root, hconf)
-      var vv = store.schema.vars.find(_.name == name).get
-      var dims = vv.dims.map(store.schema.dim)
-      val nd = dims.length
-      var chunkSz = dims.map(d =>
-        store.chunks.getOrElse(d.name, math.max(d.size, 1))).toArray
-      var dimSize = dims.map(_.size).toArray
-      def refresh(): Unit = {
-        store = BinaryGridStore.open(root, hconf)
-        vv = store.schema.vars.find(_.name == name).get
-        dims = vv.dims.map(store.schema.dim)
-        chunkSz = dims.map(d =>
-          store.chunks.getOrElse(d.name, math.max(d.size, 1))).toArray
-        dimSize = dims.map(_.size).toArray
-      }
-      // ONE shared backoff budget per partition: a metadata refresh
-      // covers every file the batch planned, so several not-yet-
-      // committed chunk files wait out one budget total (~6.3 s), not
-      // a multiple of it per file
-      var triesLeft = 10
-      rows.flatMap { r =>
-        val fn = r.getString(0).split('/').last.stripSuffix(".bin")
-        val ci = fn.split('.').map(_.toInt)
-        require(ci.length == nd, s"bad chunk file name $fn")
-        // a chunk racing an in-flight append (file visible, metadata
-        // commit not yet landed) re-reads the metadata with a short
-        // backoff — normally the commit lands within the budget and the
-        // batch proceeds; only a genuinely torn store still fails (the
-        // query then needs a manual restart: the checkpoint has already
-        // planned the file)
-        def beyondExtent =
-          (0 until nd).exists(k => ci(k) * chunkSz(k) >= dimSize(k))
-        var tries = 0
-        while (beyondExtent && triesLeft > 0) {
-          Thread.sleep(100L << math.min(tries, 3))
-          refresh()
-          tries += 1
-          triesLeft -= 1
-        }
-        require(!beyondExtent,
-          s"chunk $fn beyond committed $name extent after $tries " +
-            "metadata re-reads — torn append; restart the query once " +
-            "the writer commits")
-        // snapshot the (possibly refreshed) metadata for the cell loop
-        val start = Array.tabulate(nd)(k => ci(k) * chunkSz(k))
-        val dcur = dims
-        val shape = Array.tabulate(nd)(k =>
-          math.min(chunkSz(k), dimSize(k) - start(k)))
-        val n = shape.product
-        val data = ChunkCodec.decode(r.getAs[Array[Byte]](1),
-          store.codec, vv.dtype, n)
-        (0 until n).iterator.map { flat =>
-          val vals = new Array[Any](nd + 1)
-          var rest = flat
-          var k = nd - 1
-          while (k >= 0) {
-            val ik = start(k) + rest % shape(k)
-            rest /= shape(k)
-            vals(k) = LazyGridView.externalCoord(dcur(k).coords, ik)
-            k -= 1
-          }
-          // match the external (Row) type the outSchema declares:
-          // timestamp/duration variables decode as raw micros longs and
-          // must surface as java.sql.Timestamp / java.time.Duration —
-          // the same bridge as LazyGridView.externalCoord — or the
-          // RowEncoder rejects the row at runtime
-          vals(nd) = (data: Any) match {
-            case a: Array[Double] => a(flat)
-            case a: Array[Float] => a(flat)
-            case a: Array[Int] => a(flat)
-            case a: Array[Long] => timeBridge(a(flat), vv.dtype)
-          }
-          Row.fromSeq(vals.toIndexedSeq)
-        }
-      }
-    }(org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema))
-  }
-
-  /** [[tailCells]] over a REAL Zarr tree: stream every cell of
-    * `varName` as chunk files appear — the forecast-cycle shape, where
-    * each new model run lands new chunk files and then commits grown
-    * array metadata (xarray `append_dim` writes in that order, like our
-    * binary append). Works on v2 (both dimension separators) and v3
-    * default `c/`-prefixed keys, through the full decode matrix
-    * (compressors, blosc, filters, packed dtypes, sharded v3 —
+  /** Tail a growing Zarr tree as a STREAM — the read side of the
+    * archive's streaming story (the write side is [[appendSink]]):
+    * Spark's binaryFile streaming source watches `<root>/<varName>` —
+    * its checkpointed file tracking provides exactly-once chunk
+    * delivery — and every chunk file (present at start or appended
+    * later) decodes map-side into cell rows `(dim coords..., value)`,
+    * the same rows the batch table serves. This is the forecast-cycle
+    * shape, where each new model run lands new chunk files and then
+    * commits grown array metadata (xarray `append_dim` and
+    * [[graft.grid.ZarrGridStore.appendFromRows]] write in that order).
+    * Works on v2 (both dimension separators) and v3 default
+    * `c/`-prefixed keys, through the full decode matrix (compressors,
+    * blosc, filters, packed dtypes, sharded v3 —
     * [[graft.grid.ZarrGridStore.decodeChunkPayload]] is the shared
     * path); scaled variables surface in their logical masked-double
     * form, and PADDED edge cells are dropped (they are storage, not
-    * data). Same racing-append contract as [[tailCells]]: per-task
-    * metadata refresh with one bounded backoff budget, loud failure on
-    * a genuinely torn tree.
+    * data). A rewritten edge chunk is not re-delivered: file streams
+    * see each path once, so tailed archives should grow by whole
+    * chunks.
+    *
+    * Ordering contract: a poll racing an in-flight append can surface
+    * a chunk whose `along` coords are not yet committed. The decode
+    * task re-reads the store metadata with a short exponential backoff
+    * (one ~6 s budget per partition) until the commit lands; if the
+    * tree stays torn past the budget the task fails, which (once task
+    * retries are exhausted) STOPS the streaming query — the binaryFile
+    * checkpoint has already planned the file, so recovery is a manual
+    * restart after the writer commits, not an automatic re-poll.
     */
-  def tailCellsZarr(spark: org.apache.spark.sql.SparkSession, root: String,
+  def tailCells(spark: org.apache.spark.sql.SparkSession, root: String,
       varName: String): DataFrame = {
     val store0 = ZarrGridStore.open(root)
     val v = store0.schema.vars.find(_.name == varName).getOrElse(
@@ -386,10 +204,15 @@ object GridStreams {
     val cleanRoot = root.stripSuffix("/")
     val hconf = store0.hconf
     raw.mapPartitions { rows =>
+      // fresh metadata per task: sees extents committed by appends
       var store = ZarrGridStore.open(cleanRoot, hconf)
       def meta = store.arrays(name)
       def dims = store.schema.vars.find(_.name == name).get.dims
         .map(store.schema.dim)
+      // ONE shared backoff budget per partition: a metadata refresh
+      // covers every file the batch planned, so several not-yet-
+      // committed chunk files wait out one budget total, not a
+      // multiple of it per file
       var triesLeft = 10
       rows.flatMap { r =>
         val p = r.getString(0)
@@ -480,11 +303,4 @@ object GridStreams {
         (x % 1000000L) * 1000L)
     case _ => x
   }
-
-  /** Coordinate values in the external (Row) representation the reverse
-    * pivot compares against (single source of truth:
-    * [[graft.grid.LazyGridView.externalCoord]]).
-    */
-  private def coordValues(c: CoordArray): IndexedSeq[Any] =
-    IndexedSeq.tabulate(c.size)(i => LazyGridView.externalCoord(c, i))
 }

@@ -43,4 +43,13 @@ class DomainScoreSpec extends SparkTestBase {
       .select(col("m.score"), col("m.cls")).collect().head
     assert(out.getLong(0) == 0L && out.getString(1) == "wiki")
   }
+
+  test("negative class weights are rejected at construction") {
+    for (bad <- Seq(("web", -1L, 13L), ("web", 7L, -13L))) {
+      val e = intercept[IllegalArgumentException] {
+        DomainScore.domain_score(col("w"), classes :+ bad)
+      }
+      assert(e.getMessage.contains("non-negative"))
+    }
+  }
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** Full-circle: disk store -> SQL -> reverse pivot (template + fill) ->
-  * array store -> disk store. The "sinks" surface of SURVEY §2B.
+/** Full-circle: Zarr v3 store -> SQL -> reverse pivot (template + fill)
+  * -> array store -> Zarr v3 store, plus the distributed write, append
+  * and rechunk paths. The "sinks" surface of SURVEY §2B.
   */
 class RoundTripSpec extends SparkTestBase {
 
@@ -46,17 +47,17 @@ class RoundTripSpec extends SparkTestBase {
     val schema = GridSchema(
       Fixtures.linearGrid.schema.dims,
       Seq(VarDef("air2", Seq("t", "lat", "lon"), GDouble)))
-    val store = GridWriter.write(
+    ZarrV3.writeFromRows(
       df.select(col("t"), col("lat"), col("lon"),
         (col("air") * 2.0).as("air2")),
       schema, Map("t" -> 6, "lat" -> 7), out)
     // every chunk file exists (4 t-chunks x 2 lat-chunks) and the
     // reopened store serves exact values through the DSv2 scan
-    assert(Files.list(java.nio.file.Paths.get(out, "air2")).count() == 8L)
-    val reopened = BinaryGridStore.open(out)
-    assert(reopened.codec == "none" && reopened.chunks == Map("t" -> 6, "lat" -> 7))
+    assert(chunkFiles(s"$out/air2").size == 8)
+    val reopened = ZarrV3.open(out)
+    assert(reopened.chunkMap == Map("t" -> 6, "lat" -> 7, "lon" -> 10))
     val law = Fixtures.linearGrid.laws("air")
-    val df2 = ctx.dataFrame("gw_out", reopened, reopened.chunks,
+    val df2 = ctx.dataFrame("gw_out", reopened, reopened.chunkMap,
       Seq("t", "lat", "lon"))
     val got = df2.filter(col("t") === 7 && col("lat") === 70.0 &&
       col("lon") === 205.0).select("air2").collect()(0).getDouble(0)
@@ -71,7 +72,7 @@ class RoundTripSpec extends SparkTestBase {
 
     // missing cells prefill NaN; duplicate cells reject
     val sparseOut = Files.createTempDirectory("graft-gw2").toString
-    val sparse = GridWriter.write(
+    val sparse = ZarrV3.writeFromRows(
       df.filter(col("t") < 2).select(col("t"), col("lat"), col("lon"),
         col("air").as("air2")),
       schema, Map("t" -> 6), sparseOut)
@@ -80,7 +81,7 @@ class RoundTripSpec extends SparkTestBase {
     assert(chunk0(0) == law(Array(0, 0, 0)))
     assert(chunk0(2 * 120).isNaN) // t=2 filtered away
     val dup = intercept[org.apache.spark.SparkException] {
-      GridWriter.write(
+      ZarrV3.writeFromRows(
         df.select(col("t"), col("lat"), col("lon"), col("air").as("air2"))
           .union(df.select(col("t"), col("lat"), col("lon"),
             col("air").as("air2"))),
@@ -93,27 +94,25 @@ class RoundTripSpec extends SparkTestBase {
   test("distributed append: staged chunks rename past the extent") {
     val ctx = new XarrayContext(spark)
     val root = Files.createTempDirectory("graft-gwappend").toString + "/store"
-    BinaryGridStore.write(Fixtures.linearGridSlice(0, 12), root,
-      Map("t" -> 6), "zstd")
-    val airDir = new java.io.File(root, "air")
-    val before = airDir.listFiles().map(f => f.getName -> f.lastModified).toMap
+    ZarrV3.write(Fixtures.linearGridSlice(0, 12), root, Map("t" -> 6), "zstd")
+    val airDir = s"$root/air"
+    val before = chunkFiles(airDir)
     // the backfill slab arrives as a DataFrame — executors scatter and
     // write it, the driver renames + commits metadata
     val slab = ctx.dataFrame("gw_slab", Fixtures.linearGridSlice(12, 24),
       Map("t" -> 6), Seq("t", "lat", "lon"))
-    val appended = GridWriter.append(slab,
+    val appended = ZarrV3.appendFromRows(slab,
       Fixtures.linearGridSlice(12, 24).schema, root, "t")
     assert(appended.schema.dim("t").size == 24)
-    val after = airDir.listFiles().map(f => f.getName -> f.lastModified).toMap
+    val after = chunkFiles(airDir)
     before.foreach { case (n, m) => assert(after(n) == m, s"$n rewritten") }
-    assert(after.keySet ==
-      Set("0.0.0.bin", "1.0.0.bin", "2.0.0.bin", "3.0.0.bin"))
+    assert(after.keySet == Set("c/0/0/0", "c/1/0/0", "c/2/0/0", "c/3/0/0"))
     // no staging residue (unique .staging-* suffix per invocation)
     val parent = new java.io.File(root).getParentFile
     assert(!parent.listFiles().exists(_.getName.contains(".staging")),
       parent.listFiles().map(_.getName).mkString(","))
     // reopened store serves the seamless grid with shifted stats
-    val store = BinaryGridStore.open(root)
+    val store = ZarrV3.open(root)
     val law = Fixtures.linearGrid.laws("air")
     val got = store.readVar("air", Seq((6, 12), (0, 12), (0, 10)))
       .asInstanceOf[Array[Double]]
@@ -128,16 +127,13 @@ class RoundTripSpec extends SparkTestBase {
     val df = ctx.dataFrame("fc_gw_src", Fixtures.forecastGrid,
       Map("lead" -> 2), Seq("time", "lead"))
     val out = Files.createTempDirectory("graft-gw-dur").toString
-    // executors encode with the composed codec; open() recovers it
-    GridWriter.write(df.select(col("time"), col("lead"), col("fc")),
-      Fixtures.forecastGrid.schema, Map("lead" -> 2), out,
-      codec = "delta+zstd")
-    val reopened = BinaryGridStore.open(out)
-    assert(reopened.codec == "delta+zstd")
+    ZarrV3.writeFromRows(df.select(col("time"), col("lead"), col("fc")),
+      Fixtures.forecastGrid.schema, Map("lead" -> 2), out)
+    val reopened = ZarrV3.open(out)
     // the distributed writer records per-chunk variable stats too
     assert(reopened.stats.nonEmpty)
     assert(reopened.varBounds("fc", Seq((0, 4), (0, 2))).isDefined)
-    val df2 = ctx.dataFrame("fc_gw_rt", reopened, reopened.chunks,
+    val df2 = ctx.dataFrame("fc_gw_rt", reopened, reopened.chunkMap,
       Seq("time", "lead"))
     assert(df2.count() == 4L * 6)
     // law fc = 10 + t + 0.25*l at (t=1 -> 06:00, l=3 -> 18h)
@@ -151,9 +147,10 @@ class RoundTripSpec extends SparkTestBase {
   test("disk -> SQL -> grid -> store -> disk round trip") {
     val ctx = new XarrayContext(spark)
     val dir1 = Files.createTempDirectory("graft-rt1").toString
-    BinaryGridStore.write(Fixtures.linearGrid, dir1, Map("t" -> 6))
-    val disk = BinaryGridStore.open(dir1)
-    val df = ctx.dataFrame("rt_disk", disk, disk.chunks, Seq("t", "lat", "lon"))
+    ZarrV3.write(Fixtures.linearGrid, dir1, Map("t" -> 6))
+    val disk = ZarrV3.open(dir1)
+    val df = ctx.dataFrame("rt_disk", disk, disk.chunkMap,
+      Seq("t", "lat", "lon"))
 
     // SQL: halve the grid along t, keep values
     val res = GridResult.toGrid(
@@ -173,7 +170,7 @@ class RoundTripSpec extends SparkTestBase {
 
     // and it persists back to disk losslessly
     val dir2 = Files.createTempDirectory("graft-rt2").toString
-    val disk2 = BinaryGridStore.write(mem, dir2, Map("t" -> 4))
+    val disk2 = ZarrV3.write(mem, dir2, Map("t" -> 4))
     val a = mem.readVar("air", Seq((4, 4), (0, 12), (0, 10)))
       .asInstanceOf[Array[Double]]
     val b = disk2.readVar("air", Seq((4, 4), (0, 12), (0, 10)))
@@ -185,29 +182,30 @@ class RoundTripSpec extends SparkTestBase {
     val ctx = new XarrayContext(spark)
     val base = Files.createTempDirectory("graft-rechunk").toString
     // fragmented: 24 t-steps in 8 chunks of 3 (the post-append shape)
-    val frag = GridWriter.write(
+    val frag = ZarrV3.writeFromRows(
       ctx.dataFrame("rc_src", Fixtures.linearGrid, Map("t" -> 6),
         Seq("t", "lat", "lon")),
       Fixtures.linearGrid.schema, Map("t" -> 3), s"$base/frag", "zstd")
     val compact = ctx.rechunk(frag, Map("t" -> 12), s"$base/compact")
     // 8 chunk files per var became 2
-    assert(compact.chunks == Map("t" -> 12))
-    val files = new java.io.File(s"$base/compact/air").listFiles()
-      .filter(_.getName.endsWith(".bin"))
-    assert(files.length == 2, s"expected 2 chunk files, got ${files.length}")
+    assert(compact.chunkMap("t") == 12)
+    val files = chunkFiles(s"$base/compact/air")
+    assert(files.size == 2, s"expected 2 chunk files, got ${files.keySet}")
     // values identical across the rewrite
-    val a = ctx.dataFrame("rc_frag", frag, frag.chunks, Seq("t", "lat", "lon"))
-      .orderBy("t", "lat", "lon").collect()
-    val b = ctx.dataFrame("rc_comp", compact, compact.chunks,
+    val a = ctx.dataFrame("rc_frag", frag, frag.chunkMap,
+      Seq("t", "lat", "lon")).orderBy("t", "lat", "lon").collect()
+    val b = ctx.dataFrame("rc_comp", compact, compact.chunkMap,
       Seq("t", "lat", "lon")).orderBy("t", "lat", "lon").collect()
     assert(a.sameElements(b), "rechunk changed cell values")
     // recomputed zone maps still prune: t >= 12 opens 1 of 2 partitions
     graft.sources.ReadCounters.reset()
-    val n = ctx.dataFrame("rc_prune", compact, compact.chunks,
+    val n = ctx.dataFrame("rc_prune", compact, compact.chunkMap,
       Seq("t", "lat", "lon")).filter(col("t") >= 12).collect().length
     assert(n == 12 * 12 * 10)
     assert(graft.sources.ReadCounters.partitionsOpened.sum() == 1L,
       "rechunked store lost its pruning stats")
+    assert(compact.varBounds("air", Seq((12, 12), (0, 12), (0, 10)))
+      .contains((212.0, 272.0)))
   }
 
   test("rechunk round-trips values for randomized chunk specs") {
@@ -227,10 +225,18 @@ class RoundTripSpec extends SparkTestBase {
         Seq(VarDef("v", Seq("t", "x"), GDouble)))
       val src = SyntheticGridStore(schema,
         Map("v" -> Fixtures.AffineLaw(7.0 + case_, Seq(3.0, 11.0))))
-      val s0 = BinaryGridStore.write(src, s"$base/s$case_", spec(),
-        codec = if (rnd.nextBoolean()) "zstd" else "none")
+      // v3 sources keep their codec; a v2 zlib source becomes v3 gzip
+      val (s0, expectComp) = rnd.nextInt(3) match {
+        case 0 => (ZarrV3.write(src, s"$base/s$case_", spec(), "zstd"),
+          "zstd")
+        case 1 => (ZarrV3.write(src, s"$base/s$case_", spec(), "none"),
+          "none")
+        case _ => (ZarrGridStore.write(src, s"$base/s$case_", spec(),
+          "zlib"), "gzip")
+      }
       val s1 = ctx.rechunk(s0, spec(), s"$base/d$case_")
-      assert(s1.codec == s0.codec, s"case $case_: codec drift")
+      assert(s1.arrays("v").compressor.map(_._1).getOrElse("none") ==
+        expectComp, s"case $case_: codec drift")
       val block = Seq((0, nT), (0, nX))
       assert(s1.readVar("v", block).asInstanceOf[Array[Double]].toSeq ==
         s0.readVar("v", block).asInstanceOf[Array[Double]].toSeq,
@@ -243,15 +249,26 @@ class RoundTripSpec extends SparkTestBase {
     val base = Files.createTempDirectory("graft-rechunk-mixed").toString
     // t2m over (time, lat), pressure over (time, lat, level) — two
     // pivot tables, one store
-    val src = BinaryGridStore.write(Fixtures.mixedDims, s"$base/src",
-      Map("time" -> 1), codec = "zstd")
+    val src = ZarrV3.write(Fixtures.mixedDims, s"$base/src",
+      Map("time" -> 1), "zstd")
     val compact = ctx.rechunk(src, Map("time" -> 4), s"$base/dst")
-    assert(compact.codec == "zstd", "compaction must not re-encode")
     for (v <- Seq("t2m", "pressure")) {
+      assert(compact.arrays(v).compressor.exists(_._1 == "zstd"),
+        "compaction must not re-encode")
+      assert(compact.arrays(v).chunkShape.head == 4)
       val dims = src.schema.vars.find(_.name == v).get.dims
       val block = dims.map(d => (0, src.schema.dim(d).size))
       assert(compact.readVar(v, block).asInstanceOf[Array[Double]].toSeq ==
         src.readVar(v, block).asInstanceOf[Array[Double]].toSeq, v)
     }
+  }
+
+  /** Chunk files under a v3 array dir, relative path -> mtime. */
+  private def chunkFiles(arrayDir: String): Map[String, Long] = {
+    val base = java.nio.file.Paths.get(arrayDir)
+    Files.walk(base.resolve("c")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(Files.isRegularFile(_))
+      .map(p => base.relativize(p).toString -> p.toFile.lastModified).toMap
   }
 }

@@ -206,32 +206,6 @@ class ZarrUnalignedAppendSpec extends SparkTestBase {
     }
   }
 
-  test("binary store: a competing append committed during staging aborts") {
-    import spark.implicits._
-    val root = tmp().resolve("ccbin").toString
-    def df(t0: Int, t1: Int) =
-      (t0 until t1).map(t => (t, 10.0 + t)).toDF("t", "x")
-    def schema(t0: Int, t1: Int) = GridSchema(
-      Seq(DimDef("t", IntCoords((t0 until t1).toArray))),
-      Seq(VarDef("x", Seq("t"), GDouble)))
-    GridWriter.write(df(0, 7), schema(0, 7), Map("t" -> 5), root)
-    ZarrGridStore.appendTestHook = { _ =>
-      ZarrGridStore.appendTestHook = _ => ()
-      GridWriter.append(df(7, 12), schema(7, 12), root, "t")
-      ()
-    }
-    try {
-      val e = intercept[java.util.ConcurrentModificationException] {
-        GridWriter.append(df(7, 14), schema(7, 14), root, "t")
-      }
-      assert(e.getMessage.contains("concurrent append"), e.getMessage)
-    } finally ZarrGridStore.appendTestHook = _ => ()
-    val store = BinaryGridStore.open(root)
-    assert(store.schema.dim("t").size == 12)
-    assert(store.readVar("x", Seq((0, 12))).asInstanceOf[Array[Double]]
-      .sameElements(Array.tabulate(12)(t => 10.0 + t)))
-  }
-
   test("a crashed edge-chunk replace heals from its backup") {
     import spark.implicits._
     val dir = tmp()

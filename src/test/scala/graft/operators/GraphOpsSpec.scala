@@ -28,6 +28,23 @@ class GraphOpsSpec extends SparkTestBase {
     assert(cc.values.forall(_ == 80L))
   }
 
+  test("connected components: a multi-hop chain converges in more than one round") {
+    val sqlc = spark
+    import sqlc.implicits._
+    // chain 1-2-3-4: round 1 changes labels, and only the EAGER
+    // checkpoint of each round fills the changed-label accumulator the
+    // driver reads — a lazy one would read 0, stop after one round and
+    // return unconverged labels instead of failing at maxIter = 1
+    val edges = Seq((2L, 1L), (3L, 2L), (4L, 3L)).toDF("a", "b")
+    val e = intercept[IllegalStateException] {
+      GraphOps.connectedComponents(edges, "a", "b", maxIter = 1)
+    }
+    assert(e.getMessage.contains("did not converge"))
+    val cc = GraphOps.connectedComponents(edges, "a", "b").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cc == (1L to 4L).map(_ -> 1L).toMap)
+  }
+
   test("pointer jumping matches propagation on mixed graphs") {
     val sqlc = spark
     import sqlc.implicits._

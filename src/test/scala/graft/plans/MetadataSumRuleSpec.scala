@@ -26,12 +26,12 @@ class MetadataSumRuleSpec extends SparkTestBase {
       .getOrCreate()
   }
 
-  // linearGrid written to disk: t 0..23 (4 chunks of 6), lat 12, lon 10;
-  // air = 200 + t + 2*iLat + 3*jLon (exact integer-valued doubles)
-  private lazy val diskStore: BinaryGridStore = {
+  // linearGrid written as a zstd Zarr v3 tree: t 0..23 (4 chunks of
+  // 6), lat 12, lon 10; air = 200 + t + 2*iLat + 3*jLon (exact
+  // integer-valued doubles)
+  private lazy val diskStore: ZarrGridStore = {
     val dir = java.nio.file.Files.createTempDirectory("graft-msum").toString
-    BinaryGridStore.write(Fixtures.linearGrid, dir, Map("t" -> 6))
-    BinaryGridStore.open(dir)
+    ZarrV3.write(Fixtures.linearGrid, dir, Map("t" -> 6), "zstd")
   }
 
   private def airSum(ts: Range): Double =
@@ -39,7 +39,7 @@ class MetadataSumRuleSpec extends SparkTestBase {
       yield 200.0 + t + 2 * i + 3 * j).sum
 
   private def df = new XarrayContext(session).dataFrame(
-    s"msum${System.nanoTime()}", diskStore, diskStore.chunks,
+    s"msum${System.nanoTime()}", diskStore, diskStore.chunkMap,
     Seq("t", "lat", "lon"))
 
   test("chunk-aligned filtered SUM opens zero partitions") {
@@ -84,11 +84,10 @@ class MetadataSumRuleSpec extends SparkTestBase {
     val g = Fixtures.linearGrid
     val src = SyntheticGridStore(g.schema, Map("air" -> nanLaw))
     val dir = java.nio.file.Files.createTempDirectory("graft-msumn").toString
-    BinaryGridStore.write(src, dir, Map("t" -> 6))
-    val store = BinaryGridStore.open(dir)
+    val store = ZarrV3.write(src, dir, Map("t" -> 6), "zstd")
     assert(store.sums.size == 3) // chunk 3 refused (non-finite)
     val ndf = new XarrayContext(session).dataFrame(
-      s"msumnan${System.nanoTime()}", store, store.chunks,
+      s"msumnan${System.nanoTime()}", store, store.chunkMap,
       Seq("t", "lat", "lon"))
     // unfiltered: 3 chunks from metadata + the NaN chunk scanned
     ReadCounters.reset()

@@ -4,7 +4,7 @@ import graft.{SparkEntry, SparkTestBase}
 import graft.sources.ReadCounters
 
 /** End-to-end pins for the oracle-gated grid queries that exercise the
-  * production paths: the on-disk zstd store round trip and the
+  * production paths: the zstd Zarr v3 round trip and the
   * non-Gregorian cftime predicate (both driver-gated in SparkEntry).
   */
 class GridQueryE2ESpec extends SparkTestBase {
@@ -34,11 +34,13 @@ class GridQueryE2ESpec extends SparkTestBase {
     // listing (robust against residue of killed JVMs)
     val root = graft.queries.QueryTmp.stagedLookup("graft_disk_grid")
       .getOrElse(fail("disk fixture was not staged")) + "/store"
-    val files = new java.io.File(root, "air").listFiles()
-    assert(files != null && files.count(_.getName.endsWith(".bin")) == 4)
-    val meta = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(root, "metadata.txt"))
-    assert(meta.contains("codec zstd"))
+    val files = java.nio.file.Files.walk(
+      java.nio.file.Paths.get(root, "air", "c")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isRegularFile(_))
+    assert(files.length == 4)
+    val store = graft.grid.ZarrV3.open(root)
+    assert(store.arrays("air").compressor.exists(_._1 == "zstd"))
   }
 
   test("pivot_grid_join: mask grid broadcasts; cube side never shuffles pre-join") {
