@@ -2,10 +2,13 @@ package graft.functions
 
 import graft.time.CfCalendar
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+
+import scala.util.control.NonFatal
 
 /** Native Catalyst expressions for the hot paths where interpreted
   * higher-order functions (`zip_with` + `aggregate` lambdas) are too slow:
@@ -33,11 +36,25 @@ object GraftFunctions {
 
   /** Register `cftime(dateString)` bound to one dataset's CF units and
     * calendar (the reference auto-registers this per context when a
-    * non-Gregorian coordinate is present; sql.py:150-157).
+    * non-Gregorian coordinate is present; sql.py:150-157). A no-op when
+    * the session's `cftime` is already bound to the same (units,
+    * calendar): every re-registration logs "replaced a previously
+    * registered function", once per dataset registration otherwise.
     */
-  def registerCfTime(spark: SparkSession, units: String, calendar: String): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+  def registerCfTime(spark: SparkSession, units: String, calendar: String): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier("cftime")
+    // the binding is read back from the session itself (build the
+    // expression, inspect it), so a cftime registered by anyone else —
+    // e.g. GraftExtensions' 3-argument form — is replaced, not trusted
+    val bound = registry.functionExists(id) &&
+      (try registry.lookupFunction(id, Seq(Literal("2000-01-01"))) match {
+        case CfTimeExpr(_, u, c) => u == units && c == calendar
+        case _ => false
+      } catch { case NonFatal(_) => false })
+    if (!bound) registry.createOrReplaceTempFunction(
       "cftime", exprs => CfTimeExpr(exprs.head, units, calendar), "scala_udf")
+  }
 }
 
 /** Dot product over two array<double> columns, whole-stage-codegen'd.

@@ -93,8 +93,13 @@ object BpeTrain {
       // truncates (plan depth and replay work stay bounded); between
       // checkpoints each winner-collect simply re-applies <= CKPT_EVERY
       // projections over the pinned vocabulary — map-side, tiny
-      // against the per-job scheduling cost it replaces. LAZY: the
-      // next winner collect materializes (and persists) it.
+      // against the per-job scheduling cost it replaces. The vocabulary
+      // here is a projection of an already-checkpointed scan (no
+      // exchange), so this `localCheckpoint(false)` runs no job: the
+      // next winner collect persists it. A Dataset checkpoint is lazy
+      // only for its final stage — under AQE it executes every exchange
+      // of its plan at call time (see initialVocab; BpeTrainSpec pins
+      // the job count).
       if (step % CKPT_EVERY == 0) vocab = vocab.localCheckpoint(false)
     }
     (merges.result(), vocab)
@@ -183,9 +188,9 @@ object BpeTrain {
       }
       vocab = vocab
         .select(trim(regexp_replace(applied, " +", " ")).as("w"), col("f"))
-      // same interval checkpointing as trainLoop (one job per
-      // CKPT_EVERY rounds instead of one per round); a batched round's
-      // replay is one projection of `batch` nested replaces
+      // same interval checkpointing as trainLoop (over a projection,
+      // so it runs no job of its own); a batched round's replay is one
+      // projection of `batch` nested replaces
       if (round % CKPT_EVERY == 0) vocab = vocab.localCheckpoint(false)
     }
     (merges.result(), vocab)
@@ -202,10 +207,10 @@ object BpeTrain {
       .groupBy("word").agg(count(lit(1)).as("f"))
       .select(trim(regexp_replace(col("word"), "(.)", "$1 ")).as("w"),
         col("f"))
-      // LAZY: plan truncation now, blocks persist when round 1's
-      // winner collect first computes them — the eager count was one
-      // extra scheduled job per training build whose output nothing
-      // read before that collect anyway
+      // NOT free: under AQE a Dataset `localCheckpoint(false)` runs
+      // the word-frequency exchange as a job at call time; only the
+      // final stage's blocks wait for round 1's winner collect
+      // (BpeTrainSpec pins the count)
       .localCheckpoint(false)
 
   /** Adjacent-symbol pair counts over the current vocabulary —

@@ -198,6 +198,10 @@ object FileBloomIndex {
     // data LAST: see the crash-discipline note above
     withB.repartition(col("fbib"))
       .write.partitionBy("fbib").mode("append").parquet(s"$path/data")
+    // a lookup between the sidecar swap and this point memoized a
+    // listing without the new bucket dirs under the NEW digest — drop
+    // it so the next lookup re-lists (as purge does)
+    presentMemo.remove(path)
   }
 
   /** TOMBSTONE delete — the deletion-vector verb mirrored from the IVF
@@ -463,8 +467,11 @@ object FileBloomIndex {
     * sidecar fingerprint digest (see [[loadFiltersFp]]): the bucket
     * dir SET only changes through verbs that also swap sidecar shard
     * dirs, so an unchanged digest serves the listing with zero
-    * metadata round-trips. The purge verb additionally drops the
-    * entry around its data-dir deletes (same-JVM crash window).
+    * metadata round-trips. The sidecar swap precedes the data-dir
+    * change, though (append writes new buckets after it, purge
+    * deletes emptied ones after it), so both verbs drop the entry
+    * once their data step is done, and a candidate bucket missing
+    * from a memoized listing is re-listed before it is skipped.
     */
   private val presentMemo =
     TrieMap.empty[String, (String, Set[String])]
@@ -479,7 +486,11 @@ object FileBloomIndex {
       path: String, buckets: Seq[Int], fpDigest: String): Seq[String] = {
     if (buckets.isEmpty) return Seq.empty
     val present = presentMemo.get(path) match {
-      case Some((d, p)) if d == fpDigest => p
+      // a bloom-named bucket absent from the memoized listing may have
+      // landed since it was taken (a lookup racing an append's data
+      // write memoizes under the new digest): re-list, never skip
+      case Some((d, p)) if d == fpDigest &&
+          buckets.forall(b => p(s"fbib=$b")) => p
       case _ =>
         // ONE listStatus of the data root (not one exists() RPC per
         // candidate — on an object store that would charge every

@@ -1,10 +1,21 @@
 package graft.tools
+
+/** Plan-shape counts (broadcast / sort-merge joins, scans, exchanges,
+  * nested-loop and cartesian joins) for a fixed list of queries, on a
+  * session built with [[graft.GraftExtensions]] like the bench's.
+  *
+  * Usage: runMain graft.tools.ExplainNew <sfDir>
+  */
 object ExplainNew {
   def main(args: Array[String]): Unit = {
+    require(args.length == 1, "usage: ExplainNew <sfDir>")
+    val sfDir = args(0)
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[8]").config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.GraftExtensions).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (q <- Seq("label_propagation", "dsir_resample", "image_dhash",
         "pivot_grid_bfill",
@@ -17,7 +28,7 @@ object ExplainNew {
         "bpe_train_batched", "bpe_encode_batched",
         "perceptron_ovr_confusion", "corpus_diff")) {
       println(s"===== $q =====")
-      val df = graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.01")
+      val df = graft.SparkEntry.queries(q)(spark, sfDir)
       val plan = df.queryExecution.executedPlan.toString
       println("broadcasts: " + "BroadcastHashJoin".r.findAllIn(plan).length)
       println("sortmerge:  " + "SortMergeJoin".r.findAllIn(plan).length)

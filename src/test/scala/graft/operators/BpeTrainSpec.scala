@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.graftinterop.JobCounter
 
 /** The BPE training loop's semantic pins: greedy left-to-right merge
   * order (the overlap case "a b a b" merges BOTH pairs; "l l l"
@@ -44,6 +45,24 @@ class BpeTrainSpec extends SparkTestBase {
     val t = BpeTrain.train(docs("ab ac"), "text", 1)
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     assert(t == Seq(("a", "b")), t.toString)
+  }
+
+  test("job count: training runs its jobs while the DataFrame is built") {
+    // the merge table is driver-collected, so every job runs at build
+    // time and the result's own action runs none. Per build: ONE job
+    // for the word-frequency exchange, which the vocabulary's
+    // `localCheckpoint(false)` executes at call time under AQE (it is
+    // lazy only for the final stage), then TWO per merge (the
+    // pair-count exchange and the top-1 collect)
+    val sc = spark.sparkContext
+    def jobs(nMerges: Int) = {
+      val (m, build) = JobCounter(sc)(
+        BpeTrain.train(docs("abab abab abab", "lll xy yz"), "text", nMerges))
+      val (_, run) = JobCounter(sc)(m.collect())
+      (build, run)
+    }
+    assert(jobs(1) == (3, 0))
+    assert(jobs(2) == (5, 0))
   }
 
   test("exhausted vocabulary fails loudly, not silently short") {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.graftinterop.JobCounter
 
 class GraphOpsSpec extends SparkTestBase {
 
@@ -131,5 +132,108 @@ class GraphOpsSpec extends SparkTestBase {
     assert(got.keySet == Set(0L, 1L, 2L),
       s"every incident node must appear, got ${got.keySet}")
     assert(got(1L).contains("x") && got(2L).contains("x"))
+  }
+
+  test("fixed-iteration loops: building runs no job, collecting runs one") {
+    val sqlc = spark
+    import sqlc.implicits._
+    val sc = spark.sparkContext
+    val half = Seq((0L, 1L), (1L, 2L), (2L, 3L), (10L, 11L))
+    val edges = (half ++ half.map(_.swap)).toDF("a", "b")
+    val seeds = Seq((0L, "x"), (11L, "y")).toDF("id", "lab")
+    val (pr, prBuild) = JobCounter(sc)(GraphOps.pageRankInt(edges, "a", "b", 3))
+    val (lp, lpBuild) = JobCounter(sc)(
+      GraphOps.labelPropagate(edges, "a", "b", seeds, "id", "lab", 2))
+    assert(prBuild == 0 && lpBuild == 0,
+      s"build jobs: pageRankInt $prBuild, labelPropagate $lpBuild")
+    val (prRows, prRun) = JobCounter(sc)(pr.collect())
+    val (lpRows, lpRun) = JobCounter(sc)(lp.collect())
+    assert(prRun == 1 && lpRun == 1,
+      s"collect jobs: pageRankInt $prRun, labelPropagate $lpRun")
+    assert(prRows.length == 6 && lpRows.length == 6)
+  }
+
+  test("connected components: one job per round on the 4-node chain") {
+    val sqlc = spark
+    import sqlc.implicits._
+    val sc = spark.sparkContext
+    // chain 1-2-3-4: three rounds move labels, the fourth confirms
+    val edges = Seq((2L, 1L), (3L, 2L), (4L, 3L)).toDF("a", "b")
+    val (cc, build) = JobCounter(sc)(
+      GraphOps.connectedComponents(edges, "a", "b"))
+    assert(build == 4, s"expected one job per round (4 rounds), got $build")
+    val (rows, run) = JobCounter(sc)(cc.collect())
+    assert(run == 1, s"collect jobs: $run")
+    assert(rows.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (1L to 4L).map(_ -> 1L).toMap)
+  }
+
+  test("labelPropagate: vote ties break in UTF-8 byte order") {
+    val sqlc = spark
+    import sqlc.implicits._
+    // U+FF21 (UTF-8 EF BC A1) sorts before U+1F600 (F0 9F 98 80) by
+    // bytes, but after it by UTF-16 code units (FF21 vs D83D) — the
+    // tie-break must follow Spark's binary string order, as DuckDB's
+    val (fw, emoji) = ("\uFF21", "\uD83D\uDE00")
+    assert(emoji.compareTo(fw) < 0, "String.compareTo would pick the emoji")
+    val edges = Seq((1L, 3L), (2L, 3L)).toDF("a", "b")
+    val seeds = Seq((1L, emoji), (2L, fw)).toDF("id", "lab")
+    val got = GraphOps.labelPropagate(edges, "a", "b", seeds, "id", "lab", 1)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == Map(1L -> emoji, 2L -> fw, 3L -> fw))
+  }
+
+  test("null endpoints: nodes that never join, as under SQL joins") {
+    val sqlc = spark
+    import sqlc.implicits._
+    // the rows the per-round DataFrame loops returned for this input
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (None, Some(3L)),
+      (Some(4L), None), (Some(4L), Some(5L)), (None, None),
+      (Some(5L), Some(6L)), (Some(6L), Some(5L)), (Some(2L), Some(1L)),
+      (Some(1L), Some(2L))).toDF("a", "b")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Any, Any)] =
+      df.collect().map(r => (r.get(0), r.get(1))).toSet
+    def nullable(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(_.nullable).toSeq
+    val comps = Set[(Any, Any)]((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L),
+      (5L, 4L), (6L, 4L), (null, null))
+    val cc = GraphOps.connectedComponents(edges, "a", "b")
+    val pj = GraphOps.pointerJump(edges, "a", "b")
+    assert(rows(cc) == comps && rows(pj) == comps)
+    assert(nullable(cc) == Seq(true, true) && nullable(pj) == Seq(true, true))
+    val pr = GraphOps.pageRankInt(edges, "a", "b", 3)
+    assert(rows(pr) == Set[(Any, Any)]((1L, 421468L), (2L, 638750L),
+      (4L, 150000L), (5L, 1370812L), (6L, 1054187L), (null, 150000L)))
+    assert(nullable(pr) == Seq(true, true))
+    val seeds = Seq[(Option[Long], String)]((Some(1L), "x"), (None, "n"),
+      (Some(6L), null)).toDF("id", "lab")
+    val lp = GraphOps.labelPropagate(edges, "a", "b", seeds, "id", "lab", 2)
+    assert(rows(lp) == Set[(Any, Any)]((1L, "x"), (2L, "x"), (3L, "x"),
+      (4L, null), (5L, null), (6L, null), (null, null)))
+    assert(nullable(lp) == Seq(true, true))
+  }
+
+  test("labelPropagate: a node with k seed rows keeps k rows") {
+    val sqlc = spark
+    import sqlc.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
+    val seeds = Seq((1L, "x"), (1L, "y"), (2L, null)).toDF("id", "lab")
+    val got = GraphOps.labelPropagate(edges, "a", "b", seeds, "id", "lab", 2)
+      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    // node 1's two rows each vote once: a 1-1 tie that breaks to 'x'
+    assert(got == Seq((1L, "x"), (1L, "y"), (2L, "x"), (3L, "x")))
+  }
+
+  test("mixed id widths: ids widen as the DataFrame union would") {
+    val sqlc = spark
+    import sqlc.implicits._
+    val edges = Seq((1, 2L), (2, 3L)).toDF("a", "b")
+    val cc = GraphOps.connectedComponents(edges, "a", "b")
+    assert(cc.schema.simpleString == "struct<id:bigint,cluster:bigint>")
+    val pr = GraphOps.pageRankInt(edges, "a", "b", 2)
+    assert(pr.schema.simpleString == "struct<id:int,pr:bigint>")
+    assert(pr.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
+      Map(1 -> 150000L, 2 -> 277500L))
   }
 }

@@ -1,7 +1,14 @@
 package graft.sources
 
 import graft.{SparkTestBase, Tables}
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
+
+import java.net.URI
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 
 /** Pins for the file-level bloom index.
   *
@@ -577,6 +584,85 @@ class FileBloomIndexSpec extends SparkTestBase {
     files.foreach { f =>
       assert(allowed.exists(f.contains),
         s"read outside the candidate buckets: $f")
+    }
+  }
+
+  test("a lookup racing an append never hides the append's new buckets") {
+    val sqlc = spark
+    import sqlc.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.pausefs.impl", classOf[PausingFileSystem].getName)
+    val p = "pausefs:" + graft.queries.QueryTmp.dir("fbloomrace") + "/idx"
+    def rows(r: Range, b: Int) =
+      r.map(i => (i.toLong, b)).toDF("id", "b")
+    def ids(key: String) = FileBloomIndex.lookup(spark, p, "id", key)
+      .select("id").collect().map(_.getLong(0)).toSeq
+    FileBloomIndex.write(rows(0 until 8, 0), "id", col("b"), p, 64L)
+    assert(ids("3") == Seq(3L))
+    // hold the append after its sidecar swap, at the data write's
+    // commit setup: the sidecar names the new bucket 1, its dir is
+    // not there yet
+    val gate = PausingFileSystem.arm("/idx/data/_temporary")
+    val append = Future(FileBloomIndex.append(rows(8 until 16, 1), "id",
+      col("b"), p))(ExecutionContext.global)
+    try {
+      assert(gate.reached.await(120, TimeUnit.SECONDS),
+        "the append never reached its data write")
+      assert(ids("9").isEmpty)
+    } finally {
+      gate.go.countDown()
+      PausingFileSystem.disarm()
+    }
+    Await.result(append, 120.seconds)
+    assert(ids("9") == Seq(9L),
+      "a lookup inside the append window hid the new bucket for good")
+  }
+}
+
+/** Local disk under the `pausefs` scheme: once armed, the first mkdirs
+  * whose path contains the armed fragment signals `reached` and blocks
+  * until `go` — a deterministic interleaving point inside a writer.
+  */
+class PausingFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = "pausefs"
+  override def getUri: URI = URI.create("pausefs:///")
+
+  override def mkdirs(f: Path): Boolean = {
+    PausingFileSystem.pauseAt(f)
+    super.mkdirs(f)
+  }
+
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    PausingFileSystem.pauseAt(f)
+    super.mkdirs(f, permission)
+  }
+}
+
+object PausingFileSystem {
+  final class Gate(val fragment: String) {
+    val reached = new CountDownLatch(1)
+    val go = new CountDownLatch(1)
+  }
+
+  @volatile private var armed: Option[Gate] = None
+
+  def arm(fragment: String): Gate = {
+    val g = new Gate(fragment)
+    armed = Some(g)
+    g
+  }
+
+  def disarm(): Unit = armed = None
+
+  private[sources] def pauseAt(f: Path): Unit = {
+    val hit = synchronized { // one pause per arming
+      val g = armed.filter(g => f.toString.contains(g.fragment))
+      if (g.isDefined) armed = None
+      g
+    }
+    hit.foreach { g =>
+      g.reached.countDown()
+      g.go.await(120, TimeUnit.SECONDS)
     }
   }
 }

@@ -191,6 +191,33 @@ class CfTimeSpec extends SparkTestBase {
     assert(physical.contains("partitions=1/2"), physical)
   }
 
+  test("cftime binds once per (units, calendar), re-binds on change") {
+    val registry = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("cftime")
+    val ctx = new XarrayContext(spark)
+    ctx.fromDataset("cal360_once", cal360Store, Map("time" -> 6))
+    val first = registry.lookupFunctionBuilder(id).get
+    // same binding: the registration is skipped (no replace, no WARN)
+    ctx.fromDataset("cal360_twice", cal360Store, Map("time" -> 6))
+    assert(registry.lookupFunctionBuilder(id).get eq first)
+    def offset() = spark.sql("SELECT cftime('2000-07-01') AS o")
+      .collect()(0).getLong(0)
+    assert(offset() == 180L)
+    // a different calendar re-binds: 2000 is a Julian leap year, so
+    // 2000-07-01 is day 182 (Jan-Jun = 31+29+31+30+31+30)
+    val julian = SyntheticGridStore(
+      GridSchema(
+        Seq(DimDef("time", LongCoords(Array(0L, 182L)),
+          calendar = Some("julian"), units = Some("days since 2000-01-01"))),
+        Seq(VarDef("temp", Seq("time"), GDouble))),
+      Map("temp" -> CfTimeSpec.MLaw()))
+    ctx.fromDataset("julian_once", julian, Map("time" -> 2))
+    assert(!(registry.lookupFunctionBuilder(id).get eq first))
+    assert(offset() == 182L)
+    ctx.fromDataset("cal360_back", cal360Store, Map("time" -> 6))
+    assert(offset() == 180L)
+  }
+
   test("nonzero-offset units: decode + timestamp pruning end-to-end") {
     val ctx = new XarrayContext(spark)
     ctx.fromDataset("caloffset_t", graft.grid.Fixtures.cfOffsetGrid,
